@@ -33,6 +33,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dblab_ece_trino_spark.operators.registry import register
+from dblab_ece_trino_spark.session import shared_build
 
 # ------------------------------------------------------------------ shingles
 def char_shingles(text: Column, n: int = 5) -> Column:
@@ -198,9 +199,20 @@ def _minhash_fold_kernel(src: DataFrame, num_hashes: int) -> DataFrame:
     from ``np.minimum.reduceat`` over the int64 VIEW — signed
     comparisons, exactly the JVM ``least`` semantics.  Only (sid, hs)
     crosses the Python boundary — 8-byte keys, never text.
+
+    A null ``hs`` row (null text) gets a null ``sig``, as in the JVM
+    fold.  ``sid`` keeps its input type, which must be integral.
     """
     import numpy as np
     import pandas as pd
+    from pyspark.sql.types import IntegralType
+
+    sid_type = src.schema["sid"].dataType
+    if not isinstance(sid_type, IntegralType):
+        raise TypeError(
+            "minhash kernel needs an integral id column, got "
+            + sid_type.simpleString()
+        )
 
     mask = (1 << 64) - 1
     p1 = 0x9E3779B185EBCA87
@@ -230,8 +242,11 @@ def _minhash_fold_kernel(src: DataFrame, num_hashes: int) -> DataFrame:
             if nrow == 0:
                 continue
             arrs = pdf["hs"].to_numpy()
+            valid = pdf["hs"].notna().to_numpy()
             lens = np.fromiter(
-                (len(a) for a in arrs), dtype=np.int64, count=nrow
+                (len(a) if ok else 0 for a, ok in zip(arrs, valid)),
+                dtype=np.int64,
+                count=nrow,
             )
             total = int(lens.sum())
             starts = np.zeros(nrow, dtype=np.int64)
@@ -241,7 +256,7 @@ def _minhash_fold_kernel(src: DataFrame, num_hashes: int) -> DataFrame:
             sig = np.full((num_hashes, nrow), long_max, dtype=np.int64)
             if total:
                 flat = np.concatenate(
-                    [np.asarray(a, dtype=np.int64) for a in arrs if len(a)]
+                    [np.asarray(a, dtype=np.int64) for a in arrs[nonempty]]
                 ).view(np.uint64)
                 # inner = XXH64.hashLong(x, 42), once per shingle
                 k1 = flat * p2u
@@ -257,10 +272,15 @@ def _minhash_fold_kernel(src: DataFrame, num_hashes: int) -> DataFrame:
                     sig[k, nonempty] = np.minimum.reduceat(hv, idx)
             sig_t = np.ascontiguousarray(sig.T)
             yield pd.DataFrame(
-                {"sid": pdf["sid"], "sig": [sig_t[i] for i in range(nrow)]}
+                {
+                    "sid": pdf["sid"],
+                    "sig": [sig_t[i] if valid[i] else None for i in range(nrow)],
+                }
             )
 
-    return src.mapInPandas(gen, "sid long, sig array<bigint>")
+    return src.mapInPandas(
+        gen, f"sid {sid_type.simpleString()}, sig array<bigint>"
+    )
 
 
 def minhash_signatures(
@@ -725,13 +745,15 @@ register(
 )
 
 
-import weakref
-
-_CLUSTER_SHARED: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    weakref.WeakKeyDictionary()
+@shared_build(
+    consumers=(
+        "dedup_minhash_lsh",
+        "dedup_clusters",
+        "dedup_cluster_keep",
+        "sample_dedup_split_audit",
+        "pipeline_dedup_corpus",
+    )
 )
-
-
 def shared_minhash_clusters(
     spark: SparkSession, sf_dir: str, threshold: float = 0.7
 ):
@@ -749,20 +771,13 @@ def shared_minhash_clusters(
     """
     from dblab_ece_trino_spark.session import materialize
 
-    per = _CLUSTER_SHARED.get(spark)
-    if per is None:
-        per = {}
-        _CLUSTER_SHARED[spark] = per
-    key = (sf_dir, threshold)
-    if key not in per:
-        pairs = materialize(
-            dedup_minhash_lsh(
-                _docs(spark, sf_dir), threshold=threshold, max_bucket=None
-            )
+    pairs = materialize(
+        dedup_minhash_lsh(
+            _docs(spark, sf_dir), threshold=threshold, max_bucket=None
         )
-        labels = materialize(dedup_clusters(pairs))
-        per[key] = (pairs, labels)
-    return per[key]
+    )
+    labels = materialize(dedup_clusters(pairs))
+    return pairs, labels
 
 
 def _q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1350,11 +1365,6 @@ register("dedup_cluster_keep", _q_cluster_keep, oracle=_CLUSTER_KEEP_ORACLE)
 
 
 # -------------------------------------------------- prefix-filter all-pairs
-_SHINGLE9_SHARED: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
 def _verify_intersect_sorted(joined: DataFrame) -> DataFrame:
     """Exact per-pair set-intersection counts over a joined candidate
     frame (id_a, id_b, arr_a, arr_b) whose arrays are SORTED distinct
@@ -1417,6 +1427,7 @@ def _verify_intersect_sorted(joined: DataFrame) -> DataFrame:
     )
 
 
+@shared_build(consumers=("dedup_prefix_filter", "dedup_containment"))
 def shared_shingle_index(
     spark: SparkSession, sf_dir: str, n: int = 9
 ) -> tuple:
@@ -1446,44 +1457,37 @@ def shared_shingle_index(
 
     from dblab_ece_trino_spark.session import ensure_parallelism, materialize
 
-    per = _SHINGLE9_SHARED.get(spark)
-    if per is None:
-        per = {}
-        _SHINGLE9_SHARED[spark] = per
-    key = (sf_dir, n)
-    if key not in per:
-        docs = _docs(spark, sf_dir)
-        sig = materialize(
-            ensure_parallelism(
-                docs.select(
-                    F.col("doc_id").alias("sid"),
-                    # sorted: the verify kernel binary-searches the
-                    # arrays; set semantics are order-invariant
-                    F.sort_array(
-                        F.transform(
-                            shingles(F.col("text"), n, "char"),
-                            lambda s: F.xxhash64(s),
-                        )
-                    ).alias("arr"),
-                )
+    docs = _docs(spark, sf_dir)
+    sig = materialize(
+        ensure_parallelism(
+            docs.select(
+                F.col("doc_id").alias("sid"),
+                # sorted: the verify kernel binary-searches the
+                # arrays; set semantics are order-invariant
+                F.sort_array(
+                    F.transform(
+                        shingles(F.col("text"), n, "char"),
+                        lambda s: F.xxhash64(s),
+                    )
+                ).alias("arr"),
             )
         )
-        sh = sig.select(
-            "sid", F.size("arr").alias("sz"), F.explode("arr").alias("shingle")
+    )
+    sh = sig.select(
+        "sid", F.size("arr").alias("sz"), F.explode("arr").alias("shingle")
+    )
+    dfc = sh.groupBy("shingle").agg(F.count("*").alias("df"))
+    ranked = materialize(
+        sh.join(dfc, "shingle")
+        .withColumn(
+            "rnk",
+            F.row_number().over(
+                Window.partitionBy("sid").orderBy("df", "shingle")
+            ),
         )
-        dfc = sh.groupBy("shingle").agg(F.count("*").alias("df"))
-        ranked = materialize(
-            sh.join(dfc, "shingle")
-            .withColumn(
-                "rnk",
-                F.row_number().over(
-                    Window.partitionBy("sid").orderBy("df", "shingle")
-                ),
-            )
-            .select("sid", "shingle", "rnk", "sz")
-        )
-        per[key] = (sig, ranked)
-    return per[key]
+        .select("sid", "shingle", "rnk", "sz")
+    )
+    return sig, ranked
 
 
 def prefix_filter_pairs(

@@ -46,6 +46,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dblab_ece_trino_spark.operators.registry import register
+from dblab_ece_trino_spark.session import shared_build
 
 PR_SCALE = 10**12
 PR_ITERS = 5
@@ -262,13 +263,28 @@ def _li(spark: SparkSession, sf_dir: str) -> DataFrame:
     return engine_for(spark, sf_dir).catalogs.table("psql.tpch.lineitem")
 
 
-import weakref
-
-_PAIRS_SHARED: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    weakref.WeakKeyDictionary()
+@shared_build(
+    consumers=(
+        "graph_pagerank",
+        "graph_triangles",
+        "graph_shortest_path",
+        "graph_harmonic_centrality",
+        "graph_neighbor_jaccard",
+        "graph_label_prop",
+        "graph_kcore",
+        "graph_assortativity",
+        "graph_clustering_coeff",
+        "graph_modularity",
+        "graph_link_prediction",
+        "graph_katz_centrality",
+        "graph_degree_distribution",
+        "graph_rich_club",
+        "graph_degree_tail",
+        "graph_ktruss",
+        "graph_ppr",
+        "graph_neighborhood_func",
+    )
 )
-
-
 def shared_coorder_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ONE materialized co-order edge build per (session, sf_dir) —
     the shared_minhash_clusters / shared_ivf_build precedent applied
@@ -285,13 +301,7 @@ def shared_coorder_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from dblab_ece_trino_spark.session import materialize
 
-    per = _PAIRS_SHARED.get(spark)
-    if per is None:
-        per = {}
-        _PAIRS_SHARED[spark] = per
-    if sf_dir not in per:
-        per[sf_dir] = materialize(coorder_pairs(_li(spark, sf_dir)))
-    return per[sf_dir]
+    return materialize(coorder_pairs(_li(spark, sf_dir)))
 
 
 def _q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -603,9 +613,9 @@ def neighbor_jaccard(
     form recomputes degrees on the capped subgraph so the Jaccard stays
     internally consistent.
 
-    The cap is ON by default since round 15 — the honest-Zipf x10
-    family probe (scripts/zipf_graph_family.py) found the uncapped
-    wedge join at 2.06e10 rows (one 100k-degree hub contributes 1e10
+    The cap is ON by default since round 15 — on an honest-Zipf x10
+    co-order graph (SCALE.md, round 15) the uncapped wedge join reached
+    2.06e10 rows (one 100k-degree hub contributes 1e10
     alone; 99.3% of all wedges come from deg > 1000 witnesses), i.e.
     non-terminating at real catalog skew — the wedge-family sibling of
     the round-14 ID-oriented-triangle finding.  With the cap the join

@@ -840,10 +840,14 @@ def theta_intersection(events: DataFrame) -> DataFrame:
         .groupBy("type_a", "type_b")
         .agg(F.count(F.lit(1)).cast("long").alias("true_inter"))
     )
+    # Explicit shuffled-hash builds on the pair-count sides: the
+    # engine prefers hash joins (preferSortMergeJoin=false), but at low
+    # shuffle-partition counts the size heuristic falls back to
+    # sort-merge and adds a sort per side.
     return (
         grid.select("type_a", "type_b", "theta")
-        .join(inter, ["type_a", "type_b"], "left")
-        .join(truth, ["type_a", "type_b"], "left")
+        .join(inter.hint("shuffle_hash"), ["type_a", "type_b"], "left")
+        .join(truth.hint("shuffle_hash"), ["type_a", "type_b"], "left")
         .select(
             "type_a", "type_b",
             F.col("theta").cast("long").alias("theta"),

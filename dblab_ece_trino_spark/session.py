@@ -1,12 +1,11 @@
-"""EngineSession: SparkSession factory, scale-aware configuration, metrics.
+"""EngineSession: SparkSession factory, scale-aware configuration, shared builds.
 
 Reference parity: the Trino coordinator's query lifecycle
 (submit -> parse/analyze -> plan -> distributed execute -> paged results,
 see /root/reference data-loader/loader.py:25-68 and the captured
 ``results/*/workers-*/{explain,time}.txt``).  Here the lifecycle is
 ``engine.sql(text)`` -> Catalyst analyze/optimize -> SparkPlan with
-Exchange nodes (Trino fragments) -> actions.  ``QueryMetrics`` mirrors the
-reference's ``time.txt`` / ``query.json`` capture.
+Exchange nodes (Trino fragments) -> actions.
 
 Scale notes (100 TB design target):
 - AQE on: runtime re-plan at shuffle boundaries = Trino's CBO choice of
@@ -24,10 +23,12 @@ Scale notes (100 TB design target):
 from __future__ import annotations
 
 import contextlib
+import functools
+import inspect
 import io
 import os
-import time
-from dataclasses import dataclass, field
+import weakref
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -104,25 +105,6 @@ _RUNTIME_CONF = {
 }
 
 
-@dataclass
-class QueryMetrics:
-    """Per-query capture mirroring the reference's time.txt/query.json."""
-
-    name: str
-    elapsed_sec: float
-    rows: int | None = None
-    physical_plan: str = ""
-    extra: dict = field(default_factory=dict)
-
-    def as_dict(self) -> dict:
-        return {
-            "name": self.name,
-            "elapsed_sec": round(self.elapsed_sec, 4),
-            "rows": self.rows,
-            "extra": self.extra,
-        }
-
-
 def explain_str(df: DataFrame, mode: str = "formatted") -> str:
     """Capture df.explain(mode) output as a string (plan regression files)."""
     buf = io.StringIO()
@@ -149,7 +131,6 @@ class EngineSession:
 
         self.spark = spark
         self.catalogs = CatalogRegistry(spark)
-        self.metrics: list[QueryMetrics] = []
 
     @classmethod
     def get(cls, **builder_kwargs) -> "EngineSession":
@@ -187,20 +168,6 @@ class EngineSession:
 
         rewritten = rewrite_three_part_names(text, self.catalogs)
         return self.spark.sql(rewritten)
-
-    def run(self, text: str, name: str = "adhoc") -> tuple[list, QueryMetrics]:
-        """Execute and collect, capturing wall time + plan (bench path)."""
-        t0 = time.monotonic()
-        df = self.sql(text, name=name)
-        rows = df.collect()
-        m = QueryMetrics(
-            name=name,
-            elapsed_sec=time.monotonic() - t0,
-            rows=len(rows),
-            physical_plan=explain_str(df),
-        )
-        self.metrics.append(m)
-        return rows, m
 
 
 def get_spark(**kwargs) -> SparkSession:
@@ -268,3 +235,57 @@ def materialize(df: DataFrame) -> DataFrame:
     except Exception:  # pragma: no cover - plan introspection best-effort
         pass
     return out
+
+
+# The one per-session cache behind every @shared_build: SparkSession ->
+# {(label, bound args): build result}.  Keyed on a weakref to the session
+# for the reason entrypoints._CACHE gives (an id() key can alias a new
+# session after the old one is collected).
+_SHARED: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
+    weakref.WeakKeyDictionary()
+)
+_BUILDS: dict[str, Callable] = {}
+
+
+def shared_build(consumers: tuple[str, ...]):
+    """Cache a ``shared_<label>(spark, sf_dir, ...)`` build once per
+    session and bound arguments, and register it under ``<label>``.
+
+    A shared build is a deterministic, eagerly materialized intermediate
+    that several registered entries (``consumers``) read instead of
+    re-deriving it per query, so reuse is value-identical.  Arguments
+    are bound with their defaults applied before keying, so
+    ``f(spark, d)`` and ``f(spark, d, k=5)`` share one entry when 5 is
+    the default.  The wrapper keeps the build's name and module, which
+    is how outside tools find it.
+    """
+
+    def deco(fn: Callable) -> Callable:
+        if not fn.__name__.startswith("shared_"):
+            raise ValueError(f"{fn.__name__}: a shared build is named shared_<label>")
+        label = fn.__name__[len("shared_"):]
+        sig = inspect.signature(fn)
+
+        @functools.wraps(fn)
+        def build(spark: SparkSession, *args, **kwargs):
+            bound = sig.bind(spark, *args, **kwargs)
+            bound.apply_defaults()
+            key = (label, *list(bound.arguments.values())[1:])
+            per = _SHARED.setdefault(spark, {})
+            if key not in per:
+                per[key] = fn(spark, *args, **kwargs)
+            return per[key]
+
+        build.consumers = tuple(consumers)
+        _BUILDS[label] = build
+        return build
+
+    return deco
+
+
+def shared_builds() -> dict[str, Callable]:
+    """Every registered shared build, by label."""
+    from dblab_ece_trino_spark.operators.registry import _ensure_loaded
+
+    _ensure_loaded()
+    return dict(_BUILDS)

@@ -188,6 +188,61 @@ def test_minhash_kernel_sigs_equal_jvm(spark):
         assert jvm, "empty signature frame"
 
 
+def _sigs(df):
+    return {r["sid"]: None if r["sig"] is None else list(r["sig"])
+            for r in df.collect()}
+
+
+def test_minhash_kernel_null_text_matches_jvm(spark):
+    """Null and empty texts give the kernel the same signatures as the
+    JVM fold; a null shingle-hash array reaching the kernel gets a null
+    signature (the JVM fold's ``aggregate(null, ...)``) instead of
+    crashing the Python worker."""
+    from dblab_ece_trino_spark.operators.dedup import (
+        _minhash_fold_kernel,
+        minhash_signatures,
+    )
+
+    docs = spark.createDataFrame(
+        [(1, "the quick brown fox jumps"), (2, None), (3, ""),
+         (4, "the quick brown fox sleeps")],
+        "doc_id long, text string",
+    )
+    jvm = _sigs(minhash_signatures(docs))
+    assert _sigs(minhash_signatures(docs, kernel=True)) == jvm
+    assert set(jvm) == {1, 2, 3, 4}
+
+    hs = spark.createDataFrame(
+        [(1, [5, -7, 11]), (2, None), (3, [])], "sid long, hs array<bigint>"
+    )
+    ker = _sigs(_minhash_fold_kernel(hs, 8))
+    assert ker[2] is None
+    assert ker[3] == [(1 << 63) - 1] * 8
+    assert len(ker[1]) == 8
+
+
+def test_minhash_kernel_keeps_int_id_type(spark):
+    """The kernel's sid column takes the id column's integral type; a
+    non-integral id is rejected up front."""
+    import pytest
+    from pyspark.sql.types import IntegerType
+
+    from dblab_ece_trino_spark.operators.dedup import minhash_signatures
+
+    docs = spark.createDataFrame(
+        [(1, "a b c d e"), (2, "a b c d f"), (3, "x y z")],
+        "doc_id int, text string",
+    )
+    ker = minhash_signatures(docs, kernel=True)
+    assert isinstance(ker.schema["sid"].dataType, IntegerType)
+    assert _sigs(ker) == _sigs(minhash_signatures(docs))
+    with pytest.raises(TypeError, match="integral id column"):
+        minhash_signatures(
+            docs.selectExpr("CAST(doc_id AS STRING) AS doc_id", "text"),
+            kernel=True,
+        )
+
+
 def test_chunk_neardup_kernel_matches_oracle(spark, duck):
     from dblab_ece_trino_spark.operators.registry import (
         oracle_queries,

@@ -427,9 +427,14 @@ def main() -> None:
     from dblab_ece_trino_spark.session import EngineSession
     import __spark_entry__ as entrymod
 
+    qs = entrymod.queries()
+    # A renamed or deleted entry must not silently shrink the headline.
+    missing = [n for n in HEADLINE if n not in qs]
+    if missing:
+        sys.exit(f"# HEADLINE entries not registered: {missing}")
+
     eng = EngineSession.get(app_name="bench")
     spark = eng.spark
-    qs = entrymod.queries()
 
     # JVM/codegen warmup outside the timed region (first query otherwise
     # pays ~6s of one-time session cost and skews the smallest entry)
@@ -441,7 +446,6 @@ def main() -> None:
     reps: dict[str, list[float]] = {}
     rows: dict[str, int] = {}
     adaptive: list[str] = []
-    live = [n for n in HEADLINE if n in qs]
 
     def run(fn) -> tuple[float, int]:
         t0 = time.monotonic()
@@ -476,7 +480,7 @@ def main() -> None:
     # descending 10.5/8.4/5.8 s reps on text_vocab_drift — pure
     # session-warmup bleed under the old interleaved protocol).  The
     # pass is free: it IS the cold-timing pass the record already kept.
-    for name in live:
+    for name in HEADLINE:
         c, n = run(qs[name])
         cold[name] = round(c, 3)
         rows[name] = n
@@ -486,7 +490,7 @@ def main() -> None:
     # entry gets up to 2 extra reps (min-of-5) and is annotated in the
     # record, so a single interference spike can't set the headline and
     # a persistent spread is visible to scripts/bench_diff.py.
-    for name in live:
+    for name in HEADLINE:
         fn = qs[name]
         # Big-SF warmup hardening (round-11 verdict item 8): at sf > 0.1
         # a single prior touch does not fully warm the heavy entries
@@ -509,27 +513,13 @@ def main() -> None:
             file=sys.stderr,
         )
 
-    # Full self-contained record -> committed file.  The driver keeps only
-    # the last 2000 stdout chars, which the r6 full JSON overflowed
-    # (BENCH_r06.json parsed:null, q001-q005 truncated) — so the file is
-    # the primary artifact and the final stdout line is a compact JSON
-    # (warm times only, ~1.5k chars for 56 queries) that always fits.
+    # Full self-contained record -> BENCH_LOCAL_<basename(sf_dir)>.json
+    # at the repo root (sf0.1 -> BENCH_LOCAL_sf0.1.json), so a run
+    # overwrites only the record of its own input.  The final stdout line
+    # is a compact JSON (warm times only) kept under 2000 chars for
+    # consumers that read only the tail of stdout.
     repo = os.path.dirname(os.path.abspath(__file__))
-    rounds = [
-        int(m.group(1))
-        for f in os.listdir(repo)
-        if (m := re.fullmatch(r"BENCH_r(\d+)\.json", f))
-    ]
-    # only the driver's grading scale (sf0.1) claims the round-numbered
-    # record — a dev smoke at sf0.001 must not clobber the committed
-    # sf0.1 run, and a big-SF probe (e.g. the x10 replica ≈ sf1) gets
-    # its own named record for SCALE.md dispositions
-    if sf is not None and abs(sf - 0.1) < 1e-9:
-        local_name = f"BENCH_LOCAL_r{(max(rounds, default=0) + 1):02d}.json"
-    elif sf is not None and sf > 0.1:
-        local_name = f"BENCH_LOCAL_sf{sf:g}.json"
-    else:
-        local_name = "BENCH_LOCAL_smoke.json"
+    local_name = f"BENCH_LOCAL_{os.path.basename(os.path.normpath(sf_dir))}.json"
     full = {
         "metric": "headline query set wall time (min of 3-5 warm reps)",
         "value": round(sum(warm.values()), 3),

@@ -70,9 +70,7 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     from dblab_ece_trino_spark.operators import registry as op_registry
 
     out.update(op_registry.spark_queries())
-    # The driver grades the first 50 entries in dict order — put this
-    # round's graded set first (see registry.GRADED_PRIORITY).
-    return op_registry.ordered(out)
+    return out
 
 
 def build_oracles() -> dict[str, str]:

@@ -30,18 +30,13 @@ Scale notes (100 TB lens):
 
 from __future__ import annotations
 
-from dblab_ece_trino_spark.operators.registry import register, register_sql
+from dblab_ece_trino_spark.operators.registry import (
+    register,
+    register_sql,
+    register_template,
+)
 from dblab_ece_trino_spark.session import shared_build
 from dblab_ece_trino_spark.queries import _ORACLE_TABLES, _SPARK_TABLES
-
-
-def _both(name: str, spark_tpl: str, oracle_tpl: str | None = None) -> None:
-    oracle_tpl = oracle_tpl if oracle_tpl is not None else spark_tpl
-    register_sql(
-        name,
-        spark_tpl.format(**_SPARK_TABLES),
-        oracle_tpl.format(**_ORACLE_TABLES),
-    )
 
 
 # Extreme-value selection: the row-valued argmax/argmin aggregates.
@@ -49,7 +44,7 @@ def _both(name: str, spark_tpl: str, oracle_tpl: str | None = None) -> None:
 # testdata — asserted by tests/test_analytics.py), so the result is
 # deterministic without a composite tiebreak (DuckDB's arg_max cannot
 # order by a struct).
-_both(
+register_template(
     "op_min_max_by",
     """
     SELECT c_nationkey,
@@ -76,7 +71,7 @@ _both(
 # Regression / correlation aggregate family — one partial→final hash agg.
 # Rounded on both sides: the moment sums are order-of-summation
 # sensitive in the last ulps.
-_both(
+register_template(
     "op_stats_regression",
     """
     SELECT l_returnflag,
@@ -101,7 +96,7 @@ _both(
 # the bucket width (50000) divides the domain exactly, so Spark's
 # width_bucket and the oracle's floor-arithmetic emulation agree exactly
 # at every boundary.
-_both(
+register_template(
     "op_width_bucket_hist",
     """
     SELECT CAST(width_bucket(floor(o_totalprice), 0, 600000, 12) AS BIGINT)
@@ -126,7 +121,7 @@ _both(
 
 # Bitwise aggregates (bit_and / bit_or / bit_xor) — set-membership
 # rollups over small integer domains.
-_both(
+register_template(
     "op_bit_aggregates",
     """
     SELECT l_returnflag,
@@ -144,7 +139,7 @@ _both(
 # failing string→number cast both yield NULL instead of failing the
 # query (Trino's try(); Spark's try_divide/try_cast; DuckDB spells the
 # same semantics with NULLIF + TRY_CAST).
-_both(
+register_template(
     "op_try_arithmetic",
     """
     SELECT l_returnflag,
@@ -179,7 +174,7 @@ _both(
 # GROUPING SETS with grouping marks: grouping(col) distinguishes "NULL
 # because not grouped" from data NULLs; the combined grouping id is
 # computed portably as grouping(a)*2 + grouping(b).
-_both(
+register_template(
     "op_grouping_marks",
     """
     SELECT l_returnflag, l_linestatus,
@@ -199,7 +194,7 @@ _both(
 # (approx_percentile) must land within 1% of the exact interpolated
 # quantile.  Oracle-checkable invariant (the boolean + the exact side),
 # same pattern as op_approx_distinct.
-_both(
+register_template(
     "op_approx_percentile_tol",
     """
     SELECT CAST(round(percentile(o_totalprice, 0.5), 2) AS DOUBLE) AS exact_p50,
@@ -229,7 +224,7 @@ _both(
 # suppkey→suppkey/2): ancestor chain per supplier with depth-to-root.
 # Linear recursion, one shuffle per iteration, log2(keyspace) iterations
 # — the same bounded-iteration discipline as dedup_clusters.
-_both(
+register_template(
     "op_hierarchy_walk",
     """
     WITH RECURSIVE chain(suppkey, anc, depth) AS (
@@ -252,7 +247,7 @@ _both(
 # candidate space; levenshtein evaluates only inside blocks.  The
 # all-pairs form never appears in the plan (tests/test_plans.py asserts
 # no cartesian product).
-_both(
+register_template(
     "op_fuzzy_match",
     """
     SELECT a.p_partkey AS key_a, b.p_partkey AS key_b,
@@ -369,7 +364,7 @@ register(
 # Ordered string aggregation (SQL-standard LISTAGG ... WITHIN GROUP in
 # Spark 4; DuckDB spells it string_agg with an ORDER BY argument).
 # Explicit ordering makes the concatenation deterministic.
-_both(
+register_template(
     "op_string_agg",
     """
     SELECT c_nationkey,
@@ -397,7 +392,7 @@ _both(
 # rounding is needed.  mode is deterministic here structurally:
 # l_linenumber frequencies are strictly decreasing in the line number,
 # so the modal value (1) is uniquely most frequent in every group.
-_both(
+register_template(
     "op_median_mode",
     """
     SELECT l_returnflag,
@@ -596,7 +591,7 @@ register(
 # verdict row; at 100 TB this is a map-side-combinable single pass
 # whatever the table width, which is why expectation suites are cheap
 # enough to run on every batch.
-_both(
+register_template(
     "wh_expectations",
     """
     SELECT CAST(count(*) AS BIGINT) AS n_rows,
@@ -626,7 +621,7 @@ _both(
 # every later day's best.  The quadratic NOT-EXISTS self-join the
 # textbook definition implies never materializes.  max() is
 # order-insensitive so doubles are safe without rounding.
-_both(
+register_template(
     "op_skyline_2d",
     """
     WITH daily AS (
@@ -966,7 +961,7 @@ register(
 # beyond 2^53 would make cross-engine double equality unreliable).
 # Counts and the run total are exact integers; z is one per-row IEEE
 # expression over them.
-_both(
+register_template(
     "op_runs_test",
     """
     WITH daily AS (
@@ -1069,7 +1064,7 @@ def _register_benford() -> None:
            {chi_terms} AS chi2
     FROM counts
     """
-    _both("op_benford_test", tpl)
+    register_template("op_benford_test", tpl)
 
 
 _register_benford()
@@ -1118,7 +1113,7 @@ def _register_chi2_independence() -> None:
            CAST(2 AS BIGINT) AS dof
     FROM counts
     """
-    _both("op_chi2_independence", tpl)
+    register_template("op_chi2_independence", tpl)
 
 
 _register_chi2_independence()
@@ -1136,7 +1131,7 @@ _register_chi2_independence()
 # cent values — a calendar-bounded frame (~2500 days x 2 flags), the
 # op_runs_test precedent, so the unpartitioned window is bounded state
 # at any corpus size and the fact scan is the only corpus term.
-_both(
+register_template(
     "op_ks_test",
     """
     WITH daily AS (
@@ -1185,7 +1180,7 @@ _both(
 # The tie-corrected variance term sum(t^3 - t) is likewise exact; the
 # z finale is one per-row IEEE expression.  Same bounded distinct-value
 # frame as op_ks_test.
-_both(
+register_template(
     "op_mann_whitney",
     """
     WITH daily AS (
@@ -1616,7 +1611,7 @@ def _register_anova() -> None:
     FROM g2, scal
     ORDER BY g2.event_type
     """
-    _both("op_anova", tpl)
+    register_template("op_anova", tpl)
 
 
 _register_anova()

@@ -48,17 +48,13 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from dblab_ece_trino_spark.operators.registry import register, register_sql
+from dblab_ece_trino_spark.operators.registry import (
+    documents,
+    register,
+    register_sql,
+    register_template,
+)
 from dblab_ece_trino_spark.queries import _ORACLE_TABLES, _SPARK_TABLES
-
-
-def _both(name: str, spark_tpl: str, oracle_tpl: str | None = None) -> None:
-    oracle_tpl = oracle_tpl if oracle_tpl is not None else spark_tpl
-    register_sql(
-        name,
-        spark_tpl.format(**_SPARK_TABLES),
-        oracle_tpl.format(**_ORACLE_TABLES),
-    )
 
 
 # Ordered funnel: first view, first click AFTER that view, first
@@ -104,7 +100,7 @@ FUNNEL_TEMPLATE = """
     ORDER BY user_id
 """
 
-_both("op_funnel_conversion", FUNNEL_TEMPLATE)
+register_template("op_funnel_conversion", FUNNEL_TEMPLATE)
 
 # Weekly cohort retention: cohort = week of a user's first event;
 # n_active = distinct cohort members active k weeks later.  Counts only
@@ -136,7 +132,7 @@ _COHORT_TPL = """
     ORDER BY j.cohort_week, j.week_offset
 """
 
-_both(
+register_template(
     "op_cohort_retention",
     _COHORT_TPL.replace(
         "{datediff}", "datediff(a.activity_week, f.cohort_week)"
@@ -165,7 +161,7 @@ TRANSITIONS_TEMPLATE = """
     ORDER BY prev_type, next_type
 """
 
-_both("op_event_transitions", TRANSITIONS_TEMPLATE)
+register_template("op_event_transitions", TRANSITIONS_TEMPLATE)
 
 # Rolling 7-day distinct active users.  The scalable form: reduce to
 # DISTINCT (day, user) first (payload never shuffles again), then
@@ -189,7 +185,7 @@ _ROLLING_DAU_TPL = """
     ORDER BY day
 """
 
-_both(
+register_template(
     "op_rolling_dau",
     _ROLLING_DAU_TPL.replace(
         "{expand}", "explode(sequence(d, date_add(d, 6)))"
@@ -248,10 +244,9 @@ _BM25_N_TERMS = (
 def _q_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
-    from dblab_ece_trino_spark.entrypoints import engine_for
     from dblab_ece_trino_spark.session import materialize
 
-    docs = engine_for(spark, sf_dir).catalogs.table("lake.llm.documents")
+    docs = documents(spark, sf_dir)
     toks = docs.select(
         "doc_id", F.explode(F.split(F.trim("text"), r"\s+")).alias("tok")
     )
@@ -358,10 +353,9 @@ _COOC_MINSUP = 150
 def _q_token_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
-    from dblab_ece_trino_spark.entrypoints import engine_for
     from dblab_ece_trino_spark.session import materialize
 
-    docs = engine_for(spark, sf_dir).catalogs.table("lake.llm.documents")
+    docs = documents(spark, sf_dir)
     dt = docs.select(
         "doc_id", F.explode(F.split(F.trim("text"), r"\s+")).alias("tok")
     ).distinct()
@@ -435,7 +429,7 @@ register(
 # reduction first; the per-user first-day frame joins back on user_id
 # and one keyed agg produces the daily split.  Identical SQL on both
 # engines; counts only (exact integers).
-_both(
+register_template(
     "op_new_vs_returning",
     """
     WITH du AS (
@@ -465,7 +459,7 @@ _both(
 # agg whose output is |event types|^3 -- metadata-scale however large
 # the log is.  (ts, event_id) is a unique ordering key so the lags are
 # deterministic; the top-25 cut is tie-broken on the full trigram.
-_both(
+register_template(
     "op_event_trigrams",
     """
     WITH seq AS (
@@ -493,7 +487,7 @@ _both(
 # the rank is the per-window cut a downstream dashboard applies.  One
 # hash agg (map-side combinable: |hours| x |event types| partial rows
 # per task) + one bounded window over per-hour groups.
-_both(
+register_template(
     "op_trending_hours",
     """
     WITH hc AS (
@@ -523,7 +517,7 @@ _both(
 # state per partition is a row counter, nothing accumulates beyond the
 # frame, and the hour component keeps partitions bounded however long
 # the log is.
-_both(
+register_template(
     "op_rate_limit",
     """
     WITH r AS (
@@ -1315,7 +1309,7 @@ _STICKINESS_TPL = """
     ORDER BY a.day
 """
 
-_both(
+register_template(
     "op_user_stickiness",
     _STICKINESS_TPL.replace(
         "{expand}", "explode(sequence(d, date_add(d, 27)))"
@@ -1358,7 +1352,7 @@ _TOP_PATHS_TPL = """
     LIMIT {top}
 """
 
-_both(
+register_template(
     "op_top_paths",
     _TOP_PATHS_TPL.replace("{plen}", str(PATH_LEN))
     .replace("{top}", str(PATHS_TOP))

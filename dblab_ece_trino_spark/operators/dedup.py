@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dblab_ece_trino_spark.operators.registry import register
+from dblab_ece_trino_spark.operators.registry import documents, register
 from dblab_ece_trino_spark.session import shared_build
 
 # ------------------------------------------------------------------ shingles
@@ -674,16 +674,10 @@ def dedup_embedding_cosine(
 
 
 # ------------------------------------------------------------ query entries
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dblab_ece_trino_spark.entrypoints import engine_for
-
-    return engine_for(spark, sf_dir).catalogs.table("lake.llm.documents")
-
-
 def _q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The corpus has no byte-identical dups, so the entry doubles part of it
     # (UNION ALL with a shifted-id copy) to prove collapse actually happens.
-    docs = _docs(spark, sf_dir)
+    docs = documents(spark, sf_dir)
     doubled = docs.unionByName(
         docs.filter(F.col("doc_id") % 10 == 0).withColumn(
             "doc_id", F.col("doc_id") + 1000000
@@ -710,7 +704,7 @@ register(
 
 
 def _q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return ngram_jaccard_pairs(_docs(spark, sf_dir), threshold=0.5)
+    return ngram_jaccard_pairs(documents(spark, sf_dir), threshold=0.5)
 
 
 # DuckDB oracle: same semantics, independently expressed with unnest +
@@ -773,7 +767,7 @@ def shared_minhash_clusters(
 
     pairs = materialize(
         dedup_minhash_lsh(
-            _docs(spark, sf_dir), threshold=threshold, max_bucket=None
+            documents(spark, sf_dir), threshold=threshold, max_bucket=None
         )
     )
     labels = materialize(dedup_clusters(pairs))
@@ -945,7 +939,7 @@ def lsh_funnel_metrics(
 
 def _q_lsh_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bounded slice: constant funnel cost at any corpus scale
-    return lsh_funnel_metrics(_docs(spark, sf_dir).filter(F.col("doc_id") < 2000))
+    return lsh_funnel_metrics(documents(spark, sf_dir).filter(F.col("doc_id") < 2000))
 
 
 # Oracle: n_verified from the same exact all-pairs word-3-gram Jaccard
@@ -1005,7 +999,7 @@ def _q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # banding, the signature, and the Hamming verify are all on the hook.
     # Near-dup (perturbed-text) behavior stays covered by pytest
     # (test_simhash_similar_docs_close).
-    docs = _docs(spark, sf_dir)
+    docs = documents(spark, sf_dir)
     doubled = docs.unionByName(
         docs.filter(F.col("doc_id") % 10 == 0).withColumn(
             "doc_id", F.col("doc_id") + 1000000
@@ -1074,7 +1068,7 @@ def _q_dedup_ngram_jaccard_word(spark: SparkSession, sf_dir: str) -> DataFrame:
     # is the oracle-checked ground truth that the LSH path's recall is
     # property-tested against (tests/test_dedup.py)
     return ngram_jaccard_pairs(
-        _docs(spark, sf_dir), threshold=0.7, n=3, mode="word", max_shingle_df=1000
+        documents(spark, sf_dir), threshold=0.7, n=3, mode="word", max_shingle_df=1000
     )
 
 
@@ -1311,7 +1305,7 @@ def cluster_keep(
 
 def _q_cluster_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cluster_keep(
-        shared_minhash_clusters(spark, sf_dir)[1], _docs(spark, sf_dir)
+        shared_minhash_clusters(spark, sf_dir)[1], documents(spark, sf_dir)
     )
 
 
@@ -1457,7 +1451,7 @@ def shared_shingle_index(
 
     from dblab_ece_trino_spark.session import ensure_parallelism, materialize
 
-    docs = _docs(spark, sf_dir)
+    docs = documents(spark, sf_dir)
     sig = materialize(
         ensure_parallelism(
             docs.select(
@@ -1668,7 +1662,7 @@ def prefix_filter_pairs(
 
 def _q_dedup_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     return prefix_filter_pairs(
-        _docs(spark, sf_dir), index=shared_shingle_index(spark, sf_dir)
+        documents(spark, sf_dir), index=shared_shingle_index(spark, sf_dir)
     )
 
 
@@ -1878,7 +1872,7 @@ def containment_pairs(
 
 def _q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     return containment_pairs(
-        _docs(spark, sf_dir), index=shared_shingle_index(spark, sf_dir)
+        documents(spark, sf_dir), index=shared_shingle_index(spark, sf_dir)
     )
 
 
@@ -1930,7 +1924,7 @@ def dedup_corpus_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     which is the property that makes the fused pipeline the same cost
     as its most expensive stage instead of the sum of all four.
     """
-    docs = _docs(spark, sf_dir)
+    docs = documents(spark, sf_dir)
     _pairs, labels = shared_minhash_clusters(spark, sf_dir)
     keep = cluster_keep(labels, docs)
     lab = labels.select(F.col("sid").alias("doc_id"),
@@ -2161,7 +2155,7 @@ def chunk_neardup(
 
 
 def _q_chunk_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return chunk_neardup(_docs(spark, sf_dir))
+    return chunk_neardup(documents(spark, sf_dir))
 
 
 _CHUNK_ND_ORACLE = rf"""
@@ -2371,7 +2365,7 @@ def _q_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     seconds)."""
     from dblab_ece_trino_spark.session import ensure_parallelism, materialize
 
-    ch = materialize(cdc_chunks(ensure_parallelism(_docs(spark, sf_dir))))
+    ch = materialize(cdc_chunks(ensure_parallelism(documents(spark, sf_dir))))
     shared = (
         ch.groupBy("chunk_hash")
         .agg(F.countDistinct("doc_id").alias("nd"))

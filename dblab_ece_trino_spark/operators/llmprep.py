@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from dblab_ece_trino_spark.operators.registry import register
+from dblab_ece_trino_spark.operators.registry import documents, register
 from dblab_ece_trino_spark.session import shared_build
 from dblab_ece_trino_spark.operators.dedup import word_shingles
 
@@ -252,14 +252,8 @@ def train_order(
 
 
 # ------------------------------------------------------------ query entries
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dblab_ece_trino_spark.entrypoints import engine_for
-
-    return engine_for(spark, sf_dir).catalogs.table("lake.llm.documents")
-
-
 def _q_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return chunk_documents(_docs(spark, sf_dir))
+    return chunk_documents(documents(spark, sf_dir))
 
 
 register(
@@ -288,7 +282,7 @@ def _q_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     # plants deterministic ones (derived from doc_id, identically in the
     # oracle) — the regex surface is exercised for real, with nonzero
     # counts, and the redacted text is value-checked via its md5.
-    docs = _docs(spark, sf_dir)
+    docs = documents(spark, sf_dir)
     planted = docs.select(
         "doc_id",
         F.concat(
@@ -336,7 +330,7 @@ register(
 
 
 def _q_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return repetition_profile(_docs(spark, sf_dir))
+    return repetition_profile(documents(spark, sf_dir))
 
 
 register(
@@ -534,7 +528,7 @@ def gopher_repetition(
 
 
 def _q_gopher_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return gopher_repetition(_docs(spark, sf_dir))
+    return gopher_repetition(documents(spark, sf_dir))
 
 
 register(
@@ -594,7 +588,7 @@ def _q_tf_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     # corpus scale; the unbounded form is the production operator with a
     # hot-token cap.
     return tf_cosine_pairs(
-        _docs(spark, sf_dir).filter(F.col("doc_id") < 300), threshold_sq=0.9
+        documents(spark, sf_dir).filter(F.col("doc_id") < 300), threshold_sq=0.9
     )
 
 
@@ -630,7 +624,7 @@ def _q_dedup_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         dedup_minhash_lsh,
     )
 
-    docs = _docs(spark, sf_dir)
+    docs = documents(spark, sf_dir)
     pairs = dedup_minhash_lsh(docs, threshold=0.7, max_bucket=None)
     return resolve_duplicates(docs, dedup_clusters(pairs))
 
@@ -652,7 +646,7 @@ register("llm_dedup_resolution", _q_dedup_resolution, oracle=_resolution_oracle(
 
 
 def _q_train_order(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return train_order(_docs(spark, sf_dir))
+    return train_order(documents(spark, sf_dir))
 
 
 register(
@@ -909,7 +903,7 @@ MIX_WEIGHTS = {"en": 40, "es": 15, "de": 15, "fr": 15, "zh": 15}
 
 
 def _q_quality_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return quality_rules(_docs(spark, sf_dir))
+    return quality_rules(documents(spark, sf_dir))
 
 
 register(
@@ -954,7 +948,7 @@ register(
 
 
 def _q_domain_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return domain_mix(_docs(spark, sf_dir), MIX_WEIGHTS)
+    return domain_mix(documents(spark, sf_dir), MIX_WEIGHTS)
 
 
 register(
@@ -990,7 +984,7 @@ register(
 
 
 def _q_budget_select(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return budget_select(_docs(spark, sf_dir))
+    return budget_select(documents(spark, sf_dir))
 
 
 register(
@@ -1033,7 +1027,7 @@ register(
 
 
 def _q_vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return vocab_topk(_docs(spark, sf_dir))
+    return vocab_topk(documents(spark, sf_dir))
 
 
 register(
@@ -1104,7 +1098,7 @@ def chunk_dedup(
 
 
 def _q_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return chunk_dedup(_docs(spark, sf_dir))
+    return chunk_dedup(documents(spark, sf_dir))
 
 
 register(
@@ -1179,7 +1173,7 @@ def curate_corpus(docs: DataFrame) -> DataFrame:
 
 
 def _q_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return curate_corpus(_docs(spark, sf_dir))
+    return curate_corpus(documents(spark, sf_dir))
 
 
 register(
@@ -1316,7 +1310,7 @@ def bigram_lm_score(
 
 
 def _q_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return bigram_lm_score(_docs(spark, sf_dir))
+    return bigram_lm_score(documents(spark, sf_dir))
 
 
 register(
@@ -1369,7 +1363,7 @@ def dataset_profile(docs: DataFrame) -> DataFrame:
 
 
 def _q_dataset_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return dataset_profile(_docs(spark, sf_dir))
+    return dataset_profile(documents(spark, sf_dir))
 
 
 register(
@@ -1425,7 +1419,7 @@ def quality_floor(
 
 
 def _q_quality_floor(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return quality_floor(_docs(spark, sf_dir))
+    return quality_floor(documents(spark, sf_dir))
 
 
 register(
@@ -1481,7 +1475,7 @@ def ngram_novelty(
 
 
 def _q_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return ngram_novelty(_docs(spark, sf_dir))
+    return ngram_novelty(documents(spark, sf_dir))
 
 
 register(
@@ -1586,7 +1580,7 @@ def incremental_dedup(
 
 
 def _q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
+    docs = documents(spark, sf_dir)
     corpus = docs.filter(F.col("doc_id") % 2 == 0)
     batch = docs.filter(F.col("doc_id") % 2 == 1)
     return incremental_dedup(batch, corpus)
@@ -1705,7 +1699,7 @@ def curriculum_order(
 
 
 def _q_curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return curriculum_order(_docs(spark, sf_dir))
+    return curriculum_order(documents(spark, sf_dir))
 
 
 register(
@@ -1791,7 +1785,7 @@ def oov_rate(
 
 
 def _q_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return oov_rate(_docs(spark, sf_dir))
+    return oov_rate(documents(spark, sf_dir))
 
 
 register(
@@ -1921,7 +1915,7 @@ def _q_negative_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # applied, so each doc's drawn partner is identical to what the
     # unsliced op would emit — the slice is exactly the full op's first
     # rows
-    return negative_pairs(_docs(spark, sf_dir)).filter(F.col("doc_id") < 40)
+    return negative_pairs(documents(spark, sf_dir)).filter(F.col("doc_id") < 40)
 
 
 def _negative_pairs_oracle() -> str:
@@ -2261,9 +2255,7 @@ def _register_quantile_normalize() -> None:
     from dblab_ece_trino_spark.operators.registry import register
 
     def _q(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from dblab_ece_trino_spark.entrypoints import engine_for
-
-        docs = engine_for(spark, sf_dir).catalogs.table("lake.llm.documents")
+        docs = documents(spark, sf_dir)
         return quantile_normalize(docs)
 
     register(
@@ -2381,7 +2373,7 @@ def sequence_pack(
 
 
 def _q_sequence_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return sequence_pack(_docs(spark, sf_dir))
+    return sequence_pack(documents(spark, sf_dir))
 
 
 register(
@@ -2525,7 +2517,7 @@ def shared_dupspan_islands(
     """
     from dblab_ece_trino_spark.session import materialize
 
-    return materialize(_dupspan_islands(_docs(spark, sf_dir), n=n))
+    return materialize(_dupspan_islands(documents(spark, sf_dir), n=n))
 
 
 def dup_span_coverage(
@@ -2596,7 +2588,7 @@ def dup_span_coverage(
 
 def _q_dup_span_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dup_span_coverage(
-        _docs(spark, sf_dir), islands=shared_dupspan_islands(spark, sf_dir)
+        documents(spark, sf_dir), islands=shared_dupspan_islands(spark, sf_dir)
     )
 
 
@@ -2753,7 +2745,7 @@ def dup_span_removal(
 
 def _q_dup_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dup_span_removal(
-        _docs(spark, sf_dir), islands=shared_dupspan_islands(spark, sf_dir)
+        documents(spark, sf_dir), islands=shared_dupspan_islands(spark, sf_dir)
     )
 
 
@@ -2890,7 +2882,7 @@ def pad_waste(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
 
 def _q_pad_waste(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return pad_waste(_docs(spark, sf_dir))
+    return pad_waste(documents(spark, sf_dir))
 
 
 register(
@@ -3005,7 +2997,7 @@ def sft_format(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
 
 def _q_sft_format(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return sft_format(_docs(spark, sf_dir))
+    return sft_format(documents(spark, sf_dir))
 
 
 def _sft_oracle() -> str:
@@ -3110,7 +3102,7 @@ def loss_mask_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
 
 def _q_loss_mask(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return loss_mask_stats(_docs(spark, sf_dir))
+    return loss_mask_stats(documents(spark, sf_dir))
 
 
 register(

@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from dblab_ece_trino_spark.operators.registry import register
+from dblab_ece_trino_spark.operators.registry import documents, register
 
 MEDIA_SCHEMA = T.StructType(
     [
@@ -324,9 +324,7 @@ def resize_media(
 
 # ------------------------------------------------------------ query entries
 def _q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dblab_ece_trino_spark.entrypoints import engine_for
-
-    docs = engine_for(spark, sf_dir).catalogs.table("lake.llm.documents")
+    docs = documents(spark, sf_dir)
     media = media_from_documents(docs)
     feats = extract_features(media)
     # project the oracle-checkable scalar columns; the feature vector is
@@ -338,9 +336,7 @@ def _q_multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Frame-sampling over synthetic durations (1 ms per char) — the
     sequence-explode expansion is the real operator; durations would come
     from container metadata in production."""
-    from dblab_ece_trino_spark.entrypoints import engine_for
-
-    docs = engine_for(spark, sf_dir).catalogs.table("lake.llm.documents")
+    docs = documents(spark, sf_dir)
     media = media_from_documents(docs).withColumn(
         "meta",
         F.col("meta").withField("duration_ms", F.col("media_id") % 5000 + 1000),
@@ -370,9 +366,7 @@ def _q_multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Resize stage through the Arrow mapInPandas codec seam; the
     oracle-checkable projection is the rewritten metadata plus the
     deterministic fake-resize byte length (min(len, w·h))."""
-    from dblab_ece_trino_spark.entrypoints import engine_for
-
-    docs = engine_for(spark, sf_dir).catalogs.table("lake.llm.documents")
+    docs = documents(spark, sf_dir)
     media = media_from_documents(docs)
     resized = resize_media(media, width=64, height=64)
     return resized.select(

@@ -15,6 +15,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
+from dblab_ece_trino_spark.queries import _ORACLE_TABLES, _SPARK_TABLES
+
 SparkQuery = Callable[[SparkSession, str], DataFrame]
 
 
@@ -44,6 +46,27 @@ def register_sql(name: str, spark_sql: str, oracle: str | None = None) -> None:
 
     run.__name__ = f"query_{name}"
     register(name, run, oracle)
+
+
+def register_template(
+    name: str, spark_tpl: str, oracle_tpl: str | None = None
+) -> None:
+    """Register a SQL template rendered with 3-part names for Spark and
+    bare table names for DuckDB; the oracle template defaults to the Spark
+    one."""
+    oracle_tpl = oracle_tpl if oracle_tpl is not None else spark_tpl
+    register_sql(
+        name,
+        spark_tpl.format(**_SPARK_TABLES),
+        oracle_tpl.format(**_ORACLE_TABLES),
+    )
+
+
+def documents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The LLM corpus table (``lake.llm.documents``) for ``sf_dir``."""
+    from dblab_ece_trino_spark.entrypoints import engine_for
+
+    return engine_for(spark, sf_dir).catalogs.table("lake.llm.documents")
 
 
 def _ensure_loaded() -> None:
@@ -81,321 +104,3 @@ def spark_queries() -> dict[str, SparkQuery]:
 def oracle_queries() -> dict[str, str]:
     _ensure_loaded()
     return {n: o.oracle for n, o in _REGISTRY.items() if o.oracle is not None}
-
-
-# The driver's correctness gate grades exactly the first 50 entries of
-# queries() in registration order (verified against CORRECTNESS_r01.json:
-# graded keys == list(queries())[:50]).  This list pins which entries
-# occupy those 50 slots this round; everything else keeps its entry (and
-# its local pytest gate) and is rotated into the window in later rounds
-# so every operator accumulates a graded row.
-#
-# STEADY-STATE ROTATION POLICY (mechanical from round 9 on): the board
-# has been closed since round 6 — every registered entry's latest grade
-# is green — so the only grading debt is staleness.  Each round's
-# window is derived by unioning CORRECTNESS_r01..r{N-1}.json and taking
-#   (1) NEW never-graded ops first (never-graded outranks stale), then
-#   (2) the remaining slots filled oldest-latest-grade-first,
-#       alphabetical within a cohort (deterministic tie-break),
-# with the displacement tail (entries that don't fit) explicitly listed
-# so the next round's queue head is pre-derived.  q001-q005 rotate like
-# everything else once fresh (they were re-graded green in r8, so they
-# sit OUT of the r9 window for the first time).  With 246 entries and a
-# 50-slot window the full board re-grades every ~5 rounds, which is the
-# staleness ceiling this policy guarantees.
-#
-# WINDOW-CAPACITY DECISION (round 11, closing the round-10 verdict's
-# item 8): at ~290 entries and a fixed 50-slot driver window the full
-# re-grade period had stretched past 6 rounds.  The driver's window
-# size is not ours to raise, so the policy gains a RETIREMENT tier:
-# entries in ROTATION_RETIRED keep their queries()/oracle_sql() rows
-# (the driver surface and the cumulative board are untouched) but no
-# longer consume rotation seats — eligibility is (a) multiple
-# historical green grades and (b) a still-rotating sibling entry that
-# exercises the same operator machinery with different parameters, so
-# a silent regression in the shared code path still has a graded
-# canary.  scripts/window_check.py enforces both conditions and
-# excludes retired entries from the pre-derived queue.
-ROTATION_RETIRED: frozenset = frozenset({
-    # char-shingle twin of dedup_ngram_jaccard_word: same shingle ->
-    # explode -> pair-join -> exact-Jaccard pipeline (dedup.py), four
-    # historical greens (r1/r3/r4/r9); the word form stays rotating.
-    "dedup_ngram_jaccard",
-    # ---- ROUND-12 GROWTH (closing the r11 verdict's item 3: at 302
-    # oracle entries / 50 slots the re-grade period had hit ~6 rounds).
-    # Every entry below has >=2 historical greens with the latest
-    # green, and a named still-rotating sibling on the same machinery.
-    #
-    # TPC-H shape family (16 of 23 retired; canaries stay rotating:
-    # q1 groupby-agg, q3 join+topn, q5 6-way join, q7 cross-nation,
-    # q8 market-share CASE-agg, q9 profit, q21 anti/semi-join — plus
-    # the flagship q001-q005 and the op_join_*/op_agg_* rows exercise
-    # the identical relational stack every round):
-    "tpch_q2", "tpch_q4", "tpch_q6", "tpch_q10", "tpch_q11",
-    "tpch_q12", "tpch_q13", "tpch_q14", "tpch_q15", "tpch_q16",
-    "tpch_q17", "tpch_q18", "tpch_q19", "tpch_q20", "tpch_q21_agg",
-    "tpch_q22",
-    # Codec twins on the shared Arrow mapInPandas seam: PPM (sibling
-    # canaries: bmp/pcx/sunras/qoi/tga decodes) and plain-PCM WAV
-    # (siblings: g711/adpcm decode + audio_normalize ride the same
-    # RIFF chunk walk):
-    "multimodal_ppm_decode", "multimodal_wav_decode",
-    # Window-function parameter twins (canaries: op_window_rank_lag +
-    # op_window_navigation):
-    "op_window_rownum", "op_window_running_sum",
-    "op_window_distribution",
-    # Set-op ALL variants (canaries: op_except / op_intersect /
-    # op_union on the same SetOperation machinery):
-    "op_except_all", "op_intersect_all",
-    # Grouping-sets twin (canaries: op_agg_rollup +
-    # op_agg_grouping_sets):
-    "op_agg_cube",
-    # Rolling range-frame twin (canary: op_rolling_revenue_28d):
-    "op_rolling_dau",
-    # Histogram twin (canary: op_equidepth_hist):
-    "op_width_bucket_hist",
-    # collect/concat agg twin (canary: op_collect_agg):
-    "op_string_agg",
-    # Date-arithmetic twin (canary: op_date_functions):
-    "op_interval_arith",
-    # JSON twin (canary: op_json_extract):
-    "op_json_schema_read",
-    # Explode twin (canary: op_explode):
-    "op_lateral_explode",
-    # Anomaly-window twin (canaries: ts_expanding_anomaly + the
-    # hampel entry):
-    "ts_zscore_anomaly",
-    # Time-grid fill twin (canary: ts_interp_fill):
-    "ts_gap_fill",
-    # As-of direction twin (canary: join_asof):
-    "join_asof_forward",
-    # Rolling-hash twin (canary: text_rolling_fingerprint):
-    "text_fingerprint",
-    # ---- ROUND-13 GROWTH (closing the r12 verdict's item 3: 35 retired
-    # vs +21 ops/round left a ~6-round re-grade period).  Same two-part
-    # eligibility as above, enforced by scripts/window_check.py; the
-    # named canary is the still-rotating sibling on the same machinery.
-    #
-    # Arrow-seam image/video transform twins (canaries:
-    # multimodal_resize for the per-pixel transform seam,
-    # multimodal_y4m_frames for frame extraction):
-    "multimodal_features", "multimodal_frame_sample",
-    # Shared fuzzy-dedup build consumers (canaries: dedup_cluster_keep +
-    # dedup_minhash_lsh ride the identical shared_minhash_clusters
-    # build every round):
-    "dedup_clusters",
-    # Embedding-cosine near-dup twin (canary: dedup_embedding):
-    "dedup_semantic",
-    # Exact-hash dedup twins (canaries: dedup_exact for the
-    # hash-groupBy, llm_dedup_resolution for the keyed resolution):
-    "llm_chunk_dedup", "llm_incremental_dedup",
-    # Quantile-sketch twin (canaries: op_percentile exact path,
-    # op_dd_quantiles mergeable-sketch path):
-    "op_approx_percentile_tol",
-    # HLL family twins (canaries: op_hll_distinct + op_hll_intersection
-    # on the same register machinery; op_kmv_distinct for the
-    # native approx_count_distinct surface):
-    "op_hll_rollup", "op_approx_distinct",
-    # Sessionized-sequence twins (canaries: op_conversion_latency for
-    # sessionize+window, op_event_transitions for n-gram transitions):
-    "op_click_attribution", "op_event_trigrams",
-    # Width-bucket histogram twin (canary: op_equidepth_hist — the
-    # op_width_bucket_hist precedent above):
-    "text_length_histogram",
-    # Lag-comparison twin (canary: ts_rolling_corr on the same
-    # lag-join machinery):
-    "ts_mom_yoy_change",
-    # Time-bucket resample twin (canary: op_events_time_rollup):
-    "ts_ohlc_bars",
-    # Changelog-replay twins (canary: wh_cdc_apply applies the same
-    # ordered-changelog machinery every round):
-    "wh_time_travel", "op_snapshot_diff",
-    # Min/max zone-stat twin (canary: wh_clustering_depth reads the
-    # same per-file stats frame):
-    "wh_zone_map_pruning",
-    # Generator-invariant twin (canary: gen_store_sales_invariants):
-    "gen_fact_dim_join_invariants",
-    # Vocabulary-build twin (canary: llm_oov_rate shares the corpus
-    # vocab build):
-    "llm_vocab_topk",
-    # Gopher-gate twin (canary: llm_quality_floor):
-    "llm_quality_rules",
-    # Mixture-weight twin (canary: llm_temperature_mix):
-    "llm_domain_mix",
-    # Ordering/selection twins (canary: llm_curriculum_order):
-    "llm_budget_select", "llm_train_order",
-    # Hash-split twin (canary: sample_kfold — same md5-bucket split):
-    "sample_split",
-    # N-gram contamination twin (canary: sample_contamination_rate):
-    "decontaminate",
-    # Iterative-expansion twin (canary: op_recursive_cte):
-    "op_hierarchy_walk",
-    # Latest-version-per-key twin (canary: op_scd2_intervals):
-    "op_upsert_latest",
-    # First-seen cohort twin (canary: op_cohort_retention):
-    "op_new_vs_returning",
-    # ---- ROUND-14 GROWTH (closing the r13 verdict's item 4: at 270
-    # live rotating entries the full re-grade period had drifted to
-    # ~7.7 rounds).  Same two-part eligibility, enforced by
-    # scripts/window_check.py; every entry below has >=2 historical
-    # greens with the latest green.
-    #
-    # TPC-H shape family (5 more retired; canaries stay rotating:
-    # tpch_q1 for the groupby-agg shape, tpch_q8 for the multi-join
-    # CASE-share shape — plus q001-q005 and the op_join_*/op_agg_*
-    # rows exercise the identical relational stack every cycle):
-    "tpch_q3", "tpch_q5", "tpch_q7", "tpch_q9", "tpch_q21",
-    # Degree-frame twin (canaries: graph_degree_tail on the same
-    # per-node degree aggregation, graph_reciprocity on the weighted
-    # edge exchange):
-    "graph_assortativity",
-    # Wedge-join neighbor-overlap twin (canary: graph_link_prediction
-    # — the capped RA scores ride the identical wedge join):
-    "graph_neighbor_jaccard",
-    # Oriented-triangle-enumeration twins (canaries:
-    # graph_clustering_coeff + graph_ktruss both enumerate oriented
-    # triangles on the same co-order edge frame):
-    "graph_triangles",
-    # Fixed-iteration propagation-loop twin (canary: graph_pagerank —
-    # same materialize-per-round, one-shuffle-per-iteration loop):
-    "graph_label_prop",
-    # ANN index twins (canaries: sim_ivf_probe_sweep builds and probes
-    # the same IVF index; sim_recall_at_k runs BOTH the LSH and IVF
-    # paths against brute force every time it is graded):
-    "sim_search_ivf", "sim_search_lsh",
-    # Integer-MIPS ranking twin (canaries: sim_quantized_mips +
-    # sim_knn_classify ride the same quantized dot-product ranking):
-    "sim_mips_topk",
-    # Token-slice chunking twin (canary: llm_sequence_pack — same
-    # slice/offset machinery at sequence grain):
-    "llm_chunk_documents",
-    # TF-weighted cosine twin (canaries: text_tfidf_topk for the tf
-    # weighting, dedup_embedding for the cosine pair join):
-    "llm_tf_cosine_dup",
-    # N-gram repetition twin (canary: llm_gopher_repetition — the
-    # superset 2..6-gram repetition gate):
-    "llm_repetition_profile",
-    # Lag-join twin (canary: ts_rolling_corr — same self-join-on-lag
-    # machinery; the retired ts_mom_yoy_change precedent):
-    "ts_autocorrelation",
-    # Concordant-pair twin (canary: ts_kendall_tau — same
-    # sign-of-product pair machinery):
-    "ts_mann_kendall",
-    # Discrete-selection twin (canaries: op_percentile exact element
-    # selection + op_mad_outliers on the shared histogram form):
-    "op_median_mode",
-    # grouping_id surface twin (canary: op_agg_grouping_sets):
-    "op_grouping_marks",
-    # Literal-frame projection twin (canary: op_scalar_arithmetic):
-    "op_values_inline",
-    # Reshape twin (canary: op_pivot — the inverse of the same
-    # wide/long surface):
-    "op_unpivot",
-    # Share-of-total window twin (canaries: op_window_rank_lag +
-    # op_window_navigation):
-    "op_ratio_to_report",
-    # Interleaved-bit layout twin (canary: wh_clustering_depth reads
-    # the same per-file zone frame the zorder layout writes):
-    "wh_zorder_layout",
-    # Per-column stats-frame twin (canary: wh_expectations):
-    "wh_analyze_stats",
-    # Fused gate-pipeline twins (canaries: pipeline_curate_corpus +
-    # pipeline_dedup_corpus — the round-13 fused flagship):
-    "pipeline_clean_corpus",
-    # Sequence-packing twin (canary: llm_sequence_pack):
-    "pipeline_pack_sequences",
-    # Length/punct/stopword ratio twin (canary: text_quality_score):
-    "text_readability",
-})
-
-# ROUND-11 WINDOW (history): the 18 never-graded round-11 ops, then
-# q001-q005 (flagship freshness pull, r8-latest), then 27 seats of the
-# r5-latest cohort (each new op displaced one r5 tail entry as it
-# landed; 17 r5 entries were displaced into the round-12 queue).
-# Graded 50/50 green in CORRECTNESS_r11.json.
-#
-# ROUND-12 WINDOW (final composition: 21 new + 17 r5 + 12 r6): the 21
-# never-graded round-12 ops at the head (never-graded outranks stale),
-# then the 17 r5-latest entries the r11 window displaced, then the
-# alphabetical head of the r6 cohort MINUS the round-12 retirements
-# (op_agg_cube / op_window_rownum / op_window_distribution left the
-# rotation — see ROTATION_RETIRED).  Each new op displaced the current
-# r6 tail seat as it landed; the 10 displaced r6 entries (op_distinct
-# .. op_join_anti, op_chi2_independence, op_concurrency_sweep,
-# op_boxplot_stats) head the round-13 queue (window_check.py prints
-# it).
-# ROUND-13 WINDOW (final composition: 15 new + 1 pulled-forward + 30
-# r6 + 4 r7): the 15 never-graded round-13 ops at the head, then
-# graph_link_prediction pulled forward explicitly (r12 verdict item 1:
-# its degree-capped form — graph.py:1306, oracle graph.py:1415 —
-# changed behavior after its last r11 grade and had never been
-# driver-graded), then the full r6-latest cohort (30 entries after the
-# round-13 retirements), then the alphabetical head of the r7 cohort.
-# Each new op displaced the current r7 tail seat as it landed.
-#
-# ROUND-14 WINDOW (final composition: 5 new + 31 r7 + 10 r8 + 4 r9):
-# the 5 never-graded round-14 ops at the head, then the FULL remaining
-# r7-latest cohort (31 entries after the round-14 retirements), the
-# full r8 cohort (10 after retirements), and the alphabetical head of
-# the r9 cohort.  New-op velocity was throttled to 5 this round (r13
-# verdict item 4) so the backfill window covers three whole cohorts.
-#
-# ROUND-15 WINDOW (history, final composition: 5 new + 32 r9 + 13
-# r10): the never-graded round-15 ops at the head, then the FULL
-# remaining r9-latest cohort (32 entries after retirements), then the
-# alphabetical head of the r10 cohort.  New-op velocity held at <= 5
-# (r14 verdict item 2).
-#
-# ROUND-16 WINDOW (history): 5 never-graded r15 ops, the full r9
-# cohort, and the alphabetical head of r10.  Graded 50/50 green in
-# CORRECTNESS_r16.json.
-#
-# ROUND-17 WINDOW (optimization round 2): no new ops (optimization
-# rounds add none).  The r16 verdict (item 1) explicitly orders the 8
-# entries whose build paths were re-planned in round 16 AFTER their
-# last driver grade seated at the head — the r12
-# graph_link_prediction precedent: builder-side oracle evidence is
-# not a substitute for a driver grade on the live code path.  Next
-# come the 4 entries round 17 itself re-plans
-# (llm_dup_span_removal / llm_dup_span_coverage interval kernel,
-# dedup_chunk_neardup chunk-grain shared signatures, graph_hits
-# checkpoint A/B — same freshness rule, applied proactively this
-# time), then the steady-state queue: the remaining r10-latest cohort
-# (alphabetical), then the r11 head.  Verify any window rewrite
-# mechanically:
-#   PYTHONPATH=. python3 scripts/window_check.py
-GRADED_PRIORITY: list[str] = [
-    # round-16 re-planned, not yet driver-graded on the new paths
-    # (r16 verdict item 1, in the verdict's own order)
-    "dedup_prefix_filter", "dedup_containment", "ts_holt_trend",
-    "sample_contamination_rate", "sim_ivf_probe_sweep", "op_winsorize",
-    "op_mad_outliers", "op_boxplot_stats",
-    # round-17 re-planned entries (graded THIS round, same rule)
-    "llm_dup_span_removal", "llm_dup_span_coverage",
-    "dedup_chunk_neardup", "graph_hits",
-    # latest green = round 10 (full remaining cohort, alphabetical)
-    "op_min_max_by", "op_moments_profile", "op_sessionize_batch",
-    "op_stats_regression", "op_survival_hazard",
-    "op_token_cooccurrence", "op_top_paths", "op_try_arithmetic",
-    "op_user_stickiness", "op_window_navigation",
-    "pipeline_curate_corpus", "sample_cluster", "sample_importance",
-    "sample_systematic", "sample_weighted_topk", "sim_recall_at_k",
-    "text_bm25_score", "text_hapax_ratio", "text_rake_keyphrases",
-    "tpch_q8", "ts_ewma", "ts_expanding_anomaly", "ts_interp_fill",
-    "ts_max_drawdown", "ts_ordinal_patterns", "ts_spc_rules",
-    "wh_vacuum_planner",
-    # latest green = round 11 (alphabetical head)
-    "graph_degree_distribution", "graph_katz_centrality",
-    "graph_pagerank", "graph_shortest_path", "llm_bpe_merges",
-    "llm_curriculum_order", "llm_oov_rate", "llm_span_corruption",
-    "llm_temperature_mix", "multimodal_audio_normalize",
-    "multimodal_image_tile",
-]
-
-
-def ordered(entries: dict) -> dict:
-    """Reorder an entry dict so GRADED_PRIORITY comes first (in order),
-    followed by the remaining entries in their registration order."""
-    out = {n: entries[n] for n in GRADED_PRIORITY if n in entries}
-    out.update((n, v) for n, v in entries.items() if n not in out)
-    return out

@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from dblab_ece_trino_spark.operators.registry import register
+from dblab_ece_trino_spark.operators.registry import documents, register
 from dblab_ece_trino_spark.operators.dedup import word_shingles
 
 _HEX = "0123456789abcdef"
@@ -135,14 +135,8 @@ def decontaminate(
 
 
 # ------------------------------------------------------------ query entries
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dblab_ece_trino_spark.entrypoints import engine_for
-
-    return engine_for(spark, sf_dir).catalogs.table("lake.llm.documents")
-
-
 def _q_sample_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = split_assign(_docs(spark, sf_dir))
+    out = split_assign(documents(spark, sf_dir))
     return out.groupBy("split").agg(
         F.count("*").alias("n_docs"),
         F.min("doc_id").alias("min_id"),
@@ -165,7 +159,7 @@ register(
 
 
 def _q_sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return stratified_sample(_docs(spark, sf_dir), "lang").select(
+    return stratified_sample(documents(spark, sf_dir), "lang").select(
         "doc_id", "lang"
     )
 
@@ -184,7 +178,7 @@ register(
 
 
 def _q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
+    docs = documents(spark, sf_dir)
     # deterministic stand-in eval set: every 97th document
     benchmark = docs.filter(F.col("doc_id") % 97 == 0)
     train = docs.filter(F.col("doc_id") % 97 != 0)
@@ -246,9 +240,7 @@ def importance_sample(
 
 
 def _q_importance_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dblab_ece_trino_spark.entrypoints import engine_for
-
-    docs = engine_for(spark, sf_dir).catalogs.table("lake.llm.documents")
+    docs = documents(spark, sf_dir)
     # per-language weights: keep all 'en', half of 'de'/'fr', a quarter
     # of everything else — the canonical mixture-reweighting use
     w = (
@@ -484,11 +476,9 @@ def _q_contamination_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffled the full distinct train shingle set, which grows with
     corpus diversity at real scale.
     """
-    from dblab_ece_trino_spark.entrypoints import engine_for
-
     from dblab_ece_trino_spark.session import materialize
 
-    docs = engine_for(spark, sf_dir).catalogs.table("lake.llm.documents")
+    docs = documents(spark, sf_dir)
     ev = docs.filter(F.col("doc_id") % 97 == 0)
     tr = docs.filter(F.col("doc_id") % 97 != 0)
 
@@ -643,7 +633,7 @@ def neyman_alloc(docs: DataFrame, n: int = NEYMAN_N) -> DataFrame:
 
 
 def _q_neyman_alloc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return neyman_alloc(_docs(spark, sf_dir))
+    return neyman_alloc(documents(spark, sf_dir))
 
 
 register(
@@ -748,7 +738,7 @@ def systematic_sample(
 
 
 def _q_systematic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return systematic_sample(_docs(spark, sf_dir))
+    return systematic_sample(documents(spark, sf_dir))
 
 
 register(
@@ -794,7 +784,7 @@ def _q_cluster_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     everything else is one keyed count.  All md5 draws are the
     sampling.py discipline — both engines replay them exactly.
     """
-    docs = _docs(spark, sf_dir)
+    docs = documents(spark, sf_dir)
     cb = md5_bucket(F.col("source"), "cluster-v1")
     db = md5_bucket(F.col("doc_id"), "within-v1")
     return (
@@ -1497,7 +1487,7 @@ def epoch_shuffle_audit(
 
 
 def _q_epoch_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return epoch_shuffle_audit(_docs(spark, sf_dir))
+    return epoch_shuffle_audit(documents(spark, sf_dir))
 
 
 def _epoch_shuffle_oracle(epochs: int = EPOCH_N) -> str:

@@ -40,7 +40,11 @@ Scale notes (100 TB lens):
 
 from __future__ import annotations
 
-from dblab_ece_trino_spark.operators.registry import register, register_sql
+from dblab_ece_trino_spark.operators.registry import (
+    register,
+    register_sql,
+    register_template,
+)
 from dblab_ece_trino_spark.queries import _ORACLE_TABLES, _SPARK_TABLES
 
 _HEX = "0123456789abcdef"
@@ -88,15 +92,6 @@ def hexint_col(hash_input, digits: int = 4):
             * F.lit(16 ** (digits - 1 - i)).cast("long")
         )
     return out
-
-
-def _both(name: str, spark_tpl: str, oracle_tpl: str | None = None) -> None:
-    oracle_tpl = oracle_tpl if oracle_tpl is not None else spark_tpl
-    register_sql(
-        name,
-        spark_tpl.format(**_SPARK_TABLES),
-        oracle_tpl.format(**_ORACLE_TABLES),
-    )
 
 
 # ------------------------------------------------------------ Count-Min
@@ -154,7 +149,7 @@ def _cms_sql() -> str:
     """
 
 
-_both("op_count_min_heavy_hitters", _cms_sql())
+register_template("op_count_min_heavy_hitters", _cms_sql())
 
 
 # ------------------------------------------------------------ Bloom filter
@@ -198,7 +193,7 @@ def _bloom_sql() -> str:
     """
 
 
-_both("op_bloom_membership", _bloom_sql())
+register_template("op_bloom_membership", _bloom_sql())
 
 # ------------------------------------------------------------ KMV distinct
 # K-minimum-values distinct-count sketch (Bar-Yossef et al. 2002) — the

@@ -17,22 +17,12 @@ DuckDB oracle with engine-portable formulations:
 
 from __future__ import annotations
 
-from dblab_ece_trino_spark.operators.registry import register_sql
-from dblab_ece_trino_spark.queries import _ORACLE_TABLES, _SPARK_TABLES
-
-
-def _both(name: str, spark_tpl: str, oracle_tpl: str | None = None) -> None:
-    oracle_tpl = oracle_tpl if oracle_tpl is not None else spark_tpl
-    register_sql(
-        name,
-        spark_tpl.format(**_SPARK_TABLES),
-        oracle_tpl.format(**_ORACLE_TABLES),
-    )
+from dblab_ece_trino_spark.operators.registry import register_template
 
 
 # Recursive CTE: linear recursion with aggregation over the produced
 # series (Spark 4 WITH RECURSIVE; identical text runs on DuckDB).
-_both(
+register_template(
     "op_recursive_cte",
     """
     WITH RECURSIVE seq(n) AS (
@@ -48,7 +38,7 @@ _both(
 )
 
 # Inline VALUES relation joined against a stored table.
-_both(
+register_template(
     "op_values_inline",
     """
     SELECT v.region_name, count(*) AS nations
@@ -62,7 +52,7 @@ _both(
 
 # Lateral explode of a generated sequence — one output row per element,
 # correlated to the outer row.
-_both(
+register_template(
     "op_lateral_explode",
     """
     SELECT r_regionkey, n
@@ -76,7 +66,7 @@ _both(
 )
 
 # Map construction + key lookup, struct construction + field access.
-_both(
+register_template(
     "op_map_struct",
     """
     SELECT
@@ -100,7 +90,7 @@ _both(
 
 # UNPIVOT: wide numeric columns to (metric, value) rows — the inverse of
 # op_pivot; SQL-standard syntax accepted verbatim by both engines.
-_both(
+register_template(
     "op_unpivot",
     """
     SELECT l_orderkey, l_linenumber, metric,
@@ -116,7 +106,7 @@ _both(
 )
 
 # Multiset set operations (bag semantics — Trino supports ALL variants).
-_both(
+register_template(
     "op_except_all",
     """
     SELECT o_custkey, count(*) AS n FROM (
@@ -128,7 +118,7 @@ _both(
     """,
 )
 
-_both(
+register_template(
     "op_intersect_all",
     """
     SELECT o_custkey, count(*) AS n FROM (
@@ -143,7 +133,7 @@ _both(
 # Null-safe equality join (IS NOT DISTINCT FROM — Trino surface; Spark
 # also spells it <=>).  NULL keys match each other instead of vanishing,
 # the semantics set-ops rely on internally.
-_both(
+register_template(
     "op_null_safe_join",
     """
     SELECT
@@ -164,7 +154,7 @@ _both(
 
 # Date/interval arithmetic — INTERVAL literals are portable; date_diff's
 # unit is an unquoted keyword in Spark and a string in DuckDB.
-_both(
+register_template(
     "op_interval_arith",
     """
     SELECT o_orderkey,
@@ -189,7 +179,7 @@ _both(
 # Regular expressions.  DuckDB's regexp_replace replaces only the first
 # match unless given the 'g' flag; Spark always replaces all — the oracle
 # passes 'g' to align.
-_both(
+register_template(
     "op_regexp",
     """
     SELECT c_custkey,
@@ -216,7 +206,7 @@ _both(
 # The numeric-array output is serialized to a string (numeric sort, then
 # join) because the driver renders list columns differently per engine
 # (numpy array vs Python list); strings are render-stable.
-_both(
+register_template(
     "op_collect_agg",
     """
     SELECT n_regionkey,
@@ -240,7 +230,7 @@ _both(
 # typed struct at scan time (vs op_json_extract's per-path string
 # extraction) — the ES-analog document surface.  count_if gives the
 # conditional aggregate on the typed field.
-_both(
+register_template(
     "op_json_schema_read",
     """
     SELECT event_type,
@@ -266,7 +256,7 @@ _both(
 # Window navigation functions: first/last/nth value over the full
 # partition frame, lead with an explicit default — raw doubles pass
 # through untouched, so no rounding is needed for parity.
-_both(
+register_template(
     "op_window_navigation",
     """
     SELECT user_id, event_id,
@@ -292,7 +282,7 @@ _both(
 # Aggregate FILTER clause (SQL:2003) — per-aggregate predicates in one
 # pass, the idiomatic alternative to CASE-wrapped aggs; one scan, one
 # map-side-combinable agg.  Identical syntax on both engines.
-_both(
+register_template(
     "op_agg_filter_clause",
     """
     SELECT l_returnflag,
@@ -316,7 +306,7 @@ _both(
 # metadata-scale; the raw fact crosses one hash agg only).  The share
 # division runs on exact DECIMAL totals rendered through the same
 # round(.., 9) on both engines.
-_both(
+register_template(
     "op_ratio_to_report",
     """
     WITH per_nation AS (
@@ -369,7 +359,7 @@ def _register_correlated_subquery() -> None:
     GROUP BY n.n_name
     ORDER BY n.n_name
     """
-    _both(
+    register_template(
         "op_correlated_subquery",
         tpl.replace("{big}", "DECIMAL(38,0)"),
         tpl.replace("{big}", "HUGEINT"),
@@ -417,7 +407,7 @@ def _register_gaps_islands() -> None:
     GROUP BY len
     ORDER BY len
     """
-    _both("op_gaps_islands", tpl)
+    register_template("op_gaps_islands", tpl)
 
 
 _register_gaps_islands()
@@ -449,7 +439,7 @@ def _register_lateral_subquery() -> None:
     WHERE c.c_custkey < 100
     ORDER BY c.c_custkey, t.cents DESC, t.o_orderkey
     """
-    _both("op_lateral_subquery", tpl)
+    register_template("op_lateral_subquery", tpl)
 
 
 _register_lateral_subquery()

@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from dblab_ece_trino_spark.operators.registry import register
+from dblab_ece_trino_spark.operators.registry import documents, register
 
 # Marker vocabularies for the n-gram/stopword language heuristic.  The
 # driver corpus is synthetic word-soup, so these are demonstration lists
@@ -118,14 +118,8 @@ def rolling_fingerprint(text: Column, base: int = 31, mod: int = (1 << 61) - 1) 
 
 
 # ------------------------------------------------------------ query entries
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dblab_ece_trino_spark.entrypoints import engine_for
-
-    return engine_for(spark, sf_dir).catalogs.table("lake.llm.documents")
-
-
 def _q_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
+    docs = documents(spark, sf_dir)
     ws, re_ = token_counts(F.col("text"))
     return docs.select(
         "doc_id", ws.alias("ws_tokens"), re_.alias("re_tokens")
@@ -145,7 +139,7 @@ register(
 
 
 def _q_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
+    docs = documents(spark, sf_dir)
     feats = quality_features(F.col("text"))
     cols = [F.col("doc_id")] + [c.alias(n) for n, c in feats.items()]
     return docs.select(*cols, quality_score(F.col("text")).alias("quality"))
@@ -180,7 +174,7 @@ register(
 
 
 def _q_language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
+    docs = documents(spark, sf_dir)
     return docs.select(
         "doc_id",
         F.col("lang").alias("labeled_lang"),
@@ -215,7 +209,7 @@ register("text_language_id", _q_language_id, oracle=_lang_oracle())
 
 
 def _q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
+    docs = documents(spark, sf_dir)
     return docs.select(
         "doc_id",
         F.md5(F.col("text")).alias("md5_fingerprint"),
@@ -234,7 +228,7 @@ register(
 
 
 def _q_rolling_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
+    docs = documents(spark, sf_dir)
     return docs.select(
         "doc_id", rolling_fingerprint(F.col("text")).alias("rolling_fp")
     )
@@ -264,7 +258,7 @@ def _q_pipeline_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs, with every stage oracle-checkable."""
     from dblab_ece_trino_spark.operators.dedup import dedup_exact
 
-    docs = _docs(spark, sf_dir)
+    docs = documents(spark, sf_dir)
     keep_ids = dedup_exact(docs).select(F.col("keep_id").alias("doc_id"))
     kept = docs.join(keep_ids, "doc_id")
     scored = kept.withColumn("quality", quality_score(F.col("text")))
@@ -368,7 +362,7 @@ def pack_sequences(
 
 
 def _q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return pack_sequences(_docs(spark, sf_dir), capacity=4096, by="lang")
+    return pack_sequences(documents(spark, sf_dir), capacity=4096, by="lang")
 
 
 register(
@@ -393,7 +387,7 @@ register(
 def _q_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Document-length histogram (200-char buckets) — the corpus-report
     shape a pipeline runs before/after each cleaning stage."""
-    docs = _docs(spark, sf_dir)
+    docs = documents(spark, sf_dir)
     return (
         docs.groupBy(F.floor(F.col("n_chars") / 200).alias("bucket"))
         .agg(
@@ -456,7 +450,7 @@ def bpe_merge_candidates(
 
 
 def _q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return bpe_merge_candidates(_docs(spark, sf_dir))
+    return bpe_merge_candidates(documents(spark, sf_dir))
 
 
 register(
@@ -531,7 +525,7 @@ def tfidf_topk(
 
 
 def _q_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return tfidf_topk(_docs(spark, sf_dir))
+    return tfidf_topk(documents(spark, sf_dir))
 
 
 register(
@@ -616,7 +610,7 @@ def readability(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
 
 def _q_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return readability(_docs(spark, sf_dir))
+    return readability(documents(spark, sf_dir))
 
 
 register(
@@ -694,7 +688,7 @@ def char_diversity(docs: DataFrame, text_col: str = "text") -> DataFrame:
 def _q_char_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bounded id-slice for a constant-size graded result; the statistic
     # is per-doc, so the slice is exactly the full op's first rows
-    return char_diversity(_docs(spark, sf_dir).filter(F.col("doc_id") < 100))
+    return char_diversity(documents(spark, sf_dir).filter(F.col("doc_id") < 100))
 
 
 register(
@@ -812,7 +806,7 @@ def bpe_encode_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
 
 def _q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return bpe_encode_counts(_docs(spark, sf_dir))
+    return bpe_encode_counts(documents(spark, sf_dir))
 
 
 def _bpe_oracle(merges=None) -> str:
@@ -929,7 +923,7 @@ def tokenizer_fertility(docs: DataFrame) -> DataFrame:
 
 
 def _q_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return tokenizer_fertility(_docs(spark, sf_dir))
+    return tokenizer_fertility(documents(spark, sf_dir))
 
 
 def _fertility_oracle(merges=None) -> str:
@@ -1077,9 +1071,7 @@ def winnowing_pairs(
 
 
 def _q_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dblab_ece_trino_spark.operators.llmprep import _docs as _ldocs
-
-    return winnowing_pairs(_ldocs(spark, sf_dir))
+    return winnowing_pairs(documents(spark, sf_dir))
 
 
 def _winnowing_oracle() -> str:
@@ -1210,9 +1202,7 @@ def rake_keyphrases(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
 
 def _q_rake(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dblab_ece_trino_spark.operators.llmprep import _docs as _ldocs
-
-    return rake_keyphrases(_ldocs(spark, sf_dir))
+    return rake_keyphrases(documents(spark, sf_dir))
 
 
 def _rake_oracle() -> str:
@@ -1333,7 +1323,7 @@ def bpe_compression_curve(docs: DataFrame, ks: tuple = BPE_CURVE_KS) -> DataFram
 
 
 def _q_bpe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return bpe_compression_curve(_docs(spark, sf_dir))
+    return bpe_compression_curve(documents(spark, sf_dir))
 
 
 def _bpe_curve_point_sql(k: int) -> str:
@@ -1428,9 +1418,7 @@ def hapax_ratio(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
 
 def _q_hapax(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dblab_ece_trino_spark.operators.llmprep import _docs as _ldocs
-
-    return hapax_ratio(_ldocs(spark, sf_dir))
+    return hapax_ratio(documents(spark, sf_dir))
 
 
 register(
@@ -1520,9 +1508,7 @@ def rank_frequency_profile(
 
 
 def _q_rank_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dblab_ece_trino_spark.operators.llmprep import _docs as _ldocs
-
-    return rank_frequency_profile(_ldocs(spark, sf_dir))
+    return rank_frequency_profile(documents(spark, sf_dir))
 
 
 register(
@@ -1659,9 +1645,7 @@ def vocab_drift(
 
 
 def _q_vocab_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dblab_ece_trino_spark.operators.llmprep import _docs as _ldocs
-
-    return vocab_drift(_ldocs(spark, sf_dir))
+    return vocab_drift(documents(spark, sf_dir))
 
 
 register(
@@ -1730,7 +1714,7 @@ def _q_lang_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast join of per-label totals — corpus-linear, reduce frame
     bounded by the language-pair grid.
     """
-    docs = _docs(spark, sf_dir)
+    docs = documents(spark, sf_dir)
     tagged = docs.select(
         F.col("lang").alias("labeled_lang"),
         language_id(F.col("text")).alias("predicted_lang"),
@@ -1837,7 +1821,7 @@ def source_jaccard(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
 
 def _q_source_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return source_jaccard(_docs(spark, sf_dir))
+    return source_jaccard(documents(spark, sf_dir))
 
 
 register(
@@ -1974,7 +1958,7 @@ def heaps_growth(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
 
 def _q_heaps(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return heaps_growth(_docs(spark, sf_dir))
+    return heaps_growth(documents(spark, sf_dir))
 
 
 register(
@@ -2088,7 +2072,7 @@ def word_burstiness(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
 
 def _q_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return word_burstiness(_docs(spark, sf_dir))
+    return word_burstiness(documents(spark, sf_dir))
 
 
 register(

@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from dblab_ece_trino_spark.operators.registry import register
+from dblab_ece_trino_spark.operators.registry import documents, register
 
 
 def latest_by_key(
@@ -955,9 +955,7 @@ def _register_clustering_depth() -> None:
         )
 
     def _q(spark, sf_dir):
-        from dblab_ece_trino_spark.entrypoints import engine_for
-
-        d = engine_for(spark, sf_dir).catalogs.table("lake.llm.documents")
+        d = documents(spark, sf_dir)
         bounds = d.groupBy("source").agg(
             F.max("doc_id").cast("long").alias("mxid")
         )

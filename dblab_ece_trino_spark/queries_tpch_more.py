@@ -13,11 +13,6 @@ parity); thresholds algebraically cleared of division (``2·q > total``,
 ``v·1000 > total``) so no float comparison exists anywhere.  Q8's market
 share is the one intentional ratio: both engines divide the SAME exact
 decimal-derived doubles, so the quotient is bit-identical.
-
-Registered below the driver's 50-slot grading window this round (see
-registry.GRADED_PRIORITY); the local oracle gate (tests/test_correctness)
-covers them every run, and they rotate into the driver window in later
-rounds.
 """
 
 from __future__ import annotations

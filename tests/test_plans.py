@@ -434,7 +434,13 @@ def test_plan_census_budgets(spark):
     window pass and the 20-scan curation-pipeline lineage blow-up.  A
     new entry must add a row to tests/plan_budgets.py (regenerate with
     scripts/plan_census.py); an entry exceeding its ceiling is a plan
-    regression."""
+    regression.
+
+    The census runs twice: at the session's own shuffle.partitions
+    (max(cores, 8)) and at 32, the partition count the budgets were
+    recorded with.  Join strategy depends on the per-partition build
+    size, so a plan that fits at one end of that range can overrun at the
+    other (op_theta_sketch fell back to SortMergeJoin at 8 partitions)."""
     from scripts.plan_census import census_counts
     from tests.plan_budgets import PLAN_BUDGETS
     from dblab_ece_trino_spark.entrypoints import build_queries
@@ -445,11 +451,21 @@ def test_plan_census_budgets(spark):
         f"entries without a plan budget (run scripts/plan_census.py and "
         f"add rows to tests/plan_budgets.py): {missing}"
     )
+    key = "spark.sql.shuffle.partitions"
+    own = spark.conf.get(key)
     over: list[str] = []
-    for name, fn in qs.items():
-        c = census_counts(explain_str(fn(spark, SF_SMALL)))
-        got = (c["scans"], c["exchanges"], c["windows"], c["sorts"])
-        budget = PLAN_BUDGETS[name]
-        if any(g > b for g, b in zip(got, budget)):
-            over.append(f"{name}: {got} > budget {budget}")
+    try:
+        for partitions in dict.fromkeys((own, "32")):
+            spark.conf.set(key, partitions)
+            for name, fn in qs.items():
+                c = census_counts(explain_str(fn(spark, SF_SMALL)))
+                got = (c["scans"], c["exchanges"], c["windows"], c["sorts"])
+                budget = PLAN_BUDGETS[name]
+                if any(g > b for g, b in zip(got, budget)):
+                    over.append(
+                        f"{name} at {partitions} partitions: "
+                        f"{got} > budget {budget}"
+                    )
+    finally:
+        spark.conf.set(key, own)
     assert not over, "plan census regressions:\n" + "\n".join(over)

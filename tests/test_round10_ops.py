@@ -345,13 +345,14 @@ def test_tokenizer_fertility_identities(spark):
     the ppm ratios must be exact floor divisions of those sums."""
     from pyspark.sql import functions as F
 
+    from dblab_ece_trino_spark.operators.registry import documents
     from dblab_ece_trino_spark.operators.text import (
-        _docs,
         bpe_encode_counts,
         tokenizer_fertility,
     )
+    from tests.conftest import SF_SMALL
 
-    docs = _docs(spark, "/root/testdata/sf0.001")
+    docs = documents(spark, SF_SMALL)
     per_doc = {
         r.doc_id: r for r in bpe_encode_counts(docs).collect()
     }

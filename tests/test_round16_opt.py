@@ -56,13 +56,13 @@ def test_markov_kernel_matches_oracle(spark, duck):
 
 
 def test_prefix_filter_shared_index_equals_unshared(spark):
+    from dblab_ece_trino_spark.operators.registry import documents
     from dblab_ece_trino_spark.operators.dedup import (
-        _docs,
         prefix_filter_pairs,
         shared_shingle_index,
     )
 
-    docs = _docs(spark, SF_SMALL)
+    docs = documents(spark, SF_SMALL)
     idx = shared_shingle_index(spark, SF_SMALL)
     got = _collect_sorted(prefix_filter_pairs(docs, index=idx))
     want = _collect_sorted(prefix_filter_pairs(docs))
@@ -70,13 +70,13 @@ def test_prefix_filter_shared_index_equals_unshared(spark):
 
 
 def test_containment_shared_index_equals_unshared(spark):
+    from dblab_ece_trino_spark.operators.registry import documents
     from dblab_ece_trino_spark.operators.dedup import (
-        _docs,
         containment_pairs,
         shared_shingle_index,
     )
 
-    docs = _docs(spark, SF_SMALL)
+    docs = documents(spark, SF_SMALL)
     idx = shared_shingle_index(spark, SF_SMALL)
     got = _collect_sorted(containment_pairs(docs, index=idx))
     want = _collect_sorted(containment_pairs(docs))

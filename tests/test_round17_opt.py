@@ -51,14 +51,14 @@ def test_dup_span_shared_islands_equal_direct(spark):
     """The cached shared island frame must produce the identical output
     as the per-entry direct build (same helper, but the cache path must
     not skew grain or columns)."""
+    from dblab_ece_trino_spark.operators.registry import documents
     from dblab_ece_trino_spark.operators.llmprep import (
-        _docs,
         dup_span_coverage,
         dup_span_removal,
         shared_dupspan_islands,
     )
 
-    docs = _docs(spark, SF_SMALL)
+    docs = documents(spark, SF_SMALL)
     isl = shared_dupspan_islands(spark, SF_SMALL)
     for fn in (dup_span_coverage, dup_span_removal):
         got = _collect_sorted(fn(docs, islands=isl))
@@ -163,13 +163,13 @@ def test_minhash_kernel_sigs_equal_jvm(spark):
     aggregate/zip_with fold BIT-FOR-BIT — signed minima of the salted
     xxhash64 family — at doc grain (word mode, long shingle arrays)
     and at chunk grain (the shipped consumer)."""
+    from dblab_ece_trino_spark.operators.registry import documents
     from dblab_ece_trino_spark.operators.dedup import (
-        _docs,
         chunk_units,
         minhash_signatures,
     )
 
-    docs = _docs(spark, SF_SMALL)
+    docs = documents(spark, SF_SMALL)
     for frame, idc, txt in (
         (docs, "doc_id", "text"),
         (chunk_units(docs), "ckey", "chunk_text"),
